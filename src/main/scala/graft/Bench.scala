@@ -1,7 +1,7 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 
@@ -27,62 +27,28 @@ import org.apache.spark.sql.types.MapType
   *    (VERDICT r17 item 1).
   */
 object Bench {
+
+  /** Materialize EVERY column: bit_xor(xxhash64(c1, ..., cn)) defeats
+    * column pruning and forces per-row evaluation of the whole output
+    * schema. bit_xor, not sum — summing uniform 64-bit hashes overflows
+    * long, which ANSI mode (Spark 4 default) turns into a runtime error.
+    * (Map columns aren't hashable — stringify those; none exist today.)
+    */
+  def materialize(df: DataFrame): Unit = {
+    val cols = df.schema.fields.map { f =>
+      if (f.dataType.isInstanceOf[MapType]) col(f.name).cast("string")
+      else col(f.name)
+    }
+    df.select(bit_xor(xxhash64(cols.toSeq: _*))).collect()
+    ()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // VERDICT r14 item 6: the 274×2-query single-JVM run inflated
-      // 1.5–10× over fresh-session cost. The dominant leak is the LIVE
-      // status stores, which run even with the UI off: defaults retain
-      // 100k task records, 1k stages/jobs, and 1000 SQL executions —
-      // each SQL record holding the full plan-graph string — so ~550
-      // executions × thousands of tasks accumulate hundreds of MB of
-      // old-gen and listener-bus churn by pass2. Benchmarks don't read
-      // the UI; keep only a screenful.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.appStateStore.asyncTracking.enable", "true")
-      // r21 write-path hygiene (guide §9-adjacent, scale-independent):
-      // commit task output directly (algorithm 2 — one rename pass, not
-      // two) and skip _SUCCESS markers nothing reads. Standard
-      // production settings for FS sinks; measured on the persisted-
-      // store queries (s6/s14/s24/d14), values identical either way.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // r21: the default whole-stage-codegen class cache (100 entries)
-      // thrashes under a 282-query suite — every pass-2 slot re-pays
-      // Janino compilation for plans it already compiled in pass 1.
-      // 5000 entries lets compiled classes survive the whole pass
-      // (generated-class metadata is tens of KB each — bounded, and it
-      // caches CODE, never data/results). The standard long-running-
-      // session setting for any production endpoint serving many query
-      // shapes; static conf, so it must be set at session creation.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // Materialize EVERY column: bit_xor(xxhash64(c1, ..., cn)) defeats
-    // column pruning and forces per-row evaluation of the whole output
-    // schema. bit_xor, not sum — summing uniform 64-bit hashes overflows
-    // long, which ANSI mode (Spark 4 default) turns into a runtime error.
-    // (Map columns aren't hashable — stringify those; none exist today.)
-    def force(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val cols = df.schema.fields.map { f =>
-        if (f.dataType.isInstanceOf[MapType]) col(f.name).cast("string")
-        else col(f.name)
-      }
-      df.select(bit_xor(xxhash64(cols.toSeq: _*))).collect()
-      ()
-    }
+    def force(name: String): Unit =
+      materialize(SparkEntry.queries(name)(spark, sfDir))
     // One untimed run absorbs JVM/codegen/scan warm-up so the first timed
     // query isn't charged for it.
     try force("q1_agg") catch { case _: Throwable => () }
@@ -214,8 +180,9 @@ object Bench {
     // BEFORE it for console readability; build.sbt strips sbt's
     // "[info] " prefix from forked run output and suppresses the
     // "[success] Total time" trailer so nothing follows the contract
-    // line. Both prints happen after artifact persistence and
-    // spark.stop() so no late log write can land after them.
+    // line. Both prints happen after artifact persistence and BEFORE
+    // spark.stop(): a hang in stop must not lose the contract line, and
+    // stop itself runs bounded, logging only to stderr.
     val json = s"""{"metric":"total","queries":${fmt(pass2)},"pass1":${fmt(pass1)},"anomalies":$anomaliesJson,"value":$t2,"unit":"sec","sf":"$sfDir","n_queries":${names.size},"pass1_total":$t1,"pass2_total":$t2,"failed_pass1":$f1,"failed_pass2":$f2,"n_anomalies":${anomalies.size},"env":$envJson}"""
     val famTotals = pass2.groupBy { case (n, _) => familyOf(n) }.toSeq
       .sortBy(_._1)
@@ -278,13 +245,23 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist JSON: ${e.getMessage}")
     }
-    try spark.stop()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] spark.stop failed: ${e.getMessage}")
-    }
-    // LAST act: the two stdout lines — compact per-family summary for
-    // the console, then the full contract line as the final line.
+    // the two stdout lines — compact per-family summary for the
+    // console, then the full contract line as the final line
     println(famJson)
     println(json)
+    System.out.flush()
+    val stopper = new Thread(() =>
+      try spark.stop()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] spark.stop failed: ${e.getMessage}")
+      })
+    stopper.setDaemon(true)
+    stopper.start()
+    stopper.join(20000L)
+    if (stopper.isAlive) {
+      // a hung stop would keep the JVM alive on Spark's own threads
+      System.err.println("[bench] spark.stop did not finish in 20 s; halting")
+      Runtime.getRuntime.halt(0)
+    }
   }
 }

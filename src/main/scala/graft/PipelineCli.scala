@@ -132,15 +132,7 @@ object PipelineCli {
         System.err.println(s"error: $err")
         sys.exit(2)
       case Right(c) =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.extensions", "graft.GraftExtensions")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = GraftSession.product()
         try run(spark, c)
         finally spark.stop()
     }

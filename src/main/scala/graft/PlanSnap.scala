@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round plan archiver: write `.explain("formatted")` for the
@@ -10,7 +9,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * round's OPTIMIZATION_r*.md cites (plans/r21/<query>_<tag>.txt).
   *
   * Usage: runMain graft.PlanSnap <outDir> <tag> <query> [query ...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
+  * Runs in Bench's session ([[GraftSession.harness]]).
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
@@ -18,16 +18,7 @@ object PlanSnap {
     val tag = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

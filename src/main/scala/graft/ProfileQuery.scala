@@ -1,12 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.MapType
 
 /** Optimization-round measurement helper (guide §1): run named queries
-  * with the exact Bench materialization (bit_xor(xxhash64(*)) collect)
+  * in Bench's session ([[GraftSession.harness]]) with the exact Bench
+  * materialization ([[Bench.materialize]])
   * and report, per query, the per-Spark-job wall time with job
   * descriptions — the local stand-in for the UI's Jobs page, telling a
   * multi-action operator (k-means rounds, index write+read, persisted
@@ -15,26 +13,12 @@ import org.apache.spark.sql.types.MapType
   * summed job time and wall time (driver-side planning/IO between jobs).
   *
   * Usage: runMain graft.ProfileQuery <query> [query ...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // write-path A/B knobs (committer + success markers)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs",
-        sys.env.getOrElse("SPARK_GRAFT_SUCCESS_MARKS", "true"))
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_FOC_V", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     @volatile var jobs = List.empty[(Int, String, Long, Long)] // id, desc, start, end
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
@@ -56,17 +40,9 @@ object ProfileQuery {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def force(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val cols = df.schema.fields.map { f =>
-        if (f.dataType.isInstanceOf[MapType]) col(f.name).cast("string")
-        else col(f.name)
-      }
-      df.select(bit_xor(xxhash64(cols.toSeq: _*))).collect()
-      ()
-    }
     // same warm-up as Bench
-    try force("q1_agg") catch { case _: Throwable => () }
+    try Bench.materialize(SparkEntry.queries("q1_agg")(spark, sfDir))
+    catch { case _: Throwable => () }
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROF_REPS", "1").toInt
     args.foreach { name =>
@@ -75,12 +51,8 @@ object ProfileQuery {
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(spark, sfDir)
         val tConstruct = (System.nanoTime() - t0) / 1e9
-        val cols = df.schema.fields.map { f =>
-          if (f.dataType.isInstanceOf[MapType]) col(f.name).cast("string")
-          else col(f.name)
-        }
         val t1 = System.nanoTime()
-        df.select(bit_xor(xxhash64(cols.toSeq: _*))).collect()
+        Bench.materialize(df)
         val tAction = (System.nanoTime() - t1) / 1e9
         Thread.sleep(200) // let the listener bus drain job-end events
         val js = jobs.sortBy(_._1)

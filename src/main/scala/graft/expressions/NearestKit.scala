@@ -479,7 +479,7 @@ object NearestCentroidGrouped {
   * where the 2-level super-pass itself (O(√k·d) per row) becomes the
   * double-flop wall (k·d ≈ 6.4×10⁷ flops/row at k ~ 10⁶). Built now,
   * behind [[graft.operators.SimilarityOps.nearestExpr]]'s k-threshold /
-  * `graft.ann.treeLevels` flag, so the structure exists before the
+  * `treeLevels` parameter, so the structure exists before the
   * scale does (VERDICT r16 item 4).
   *
   * Structure: the ~√k groups of the 2-level tree are themselves grouped
@@ -654,9 +654,9 @@ object NearestCentroidGrouped3 {
         // the super bounds cannot separate (every lbA ≈ 0 — the
         // concentrated case), this is what keeps the running minimum
         // tightening as fast as the 2-level form's global-min seed —
-        // without it the first TreeBench probe measured 3-level
-        // assignment SLOWER than flat (43 s vs 32 s at k = 4096)
-        // purely from visit order
+        // without it the first 3-level cut measured SLOWER than flat
+        // (43 s vs 32 s at k = 4096; SCALE.md §10g on
+        // bench/ANN_TREE_r17_mult50.json) purely from visit order
         var minGi = members(0)
         var mi = 1
         while (mi < members.length) {

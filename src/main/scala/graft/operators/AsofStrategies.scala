@@ -32,11 +32,12 @@ import org.apache.spark.sql.functions._
   * convention, not per-column ignoreNulls — identical whenever the
   * carried columns are non-null, which is the J4 pipeline case.
   *
-  * Verdict after measuring (AsofBench, SCALE.md §8): NOT adopted as the
-  * default — the union form wins at production skew (and the level
-  * pipeline's per-site series are calendar-bounded anyway); this exists
-  * as the documented escape hatch for a pathological single-series
-  * workload, the same role [[SkewOps.saltedJoin]] plays for joins.
+  * Verdict after measuring (bench/ASOF_SPIKE_r13_mult{50,200}.json,
+  * SCALE.md §8): NOT adopted as the default — the union form wins at
+  * production skew (and the level pipeline's per-site series are
+  * calendar-bounded anyway); this exists as the documented escape hatch
+  * for a pathological single-series workload, the same role
+  * [[SkewOps.saltedJoin]] plays for joins.
   */
 object AsofStrategies {
 

@@ -59,6 +59,9 @@ object DriverParquet {
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
     try rows.foreach { r =>
+      require(r.length == fields.length,
+        s"DriverParquet row has ${r.length} values for ${fields.length} " +
+          s"fields (${fields.map(_.name).mkString(", ")})")
       val g = new SimpleGroup(schema)
       // via Number, not asInstanceOf[Int]: Scala widens Seq(int, int,
       // double) literals to Seq[Double] at call sites, so an int-typed

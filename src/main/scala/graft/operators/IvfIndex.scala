@@ -281,10 +281,9 @@ object IvfIndex {
 
   /** `treeLevels` forces the nearest-centroid routing structure for
     * THIS build's assignments (1 = flat, 2/3 = coarse-quantizer tree;
-    * None = k-threshold auto, overridable process-wide by the
-    * `graft.ann.treeLevels` sysprop). An explicit parameter, not a
-    * sysprop mutation, so forcing a level for one build (v53's 3-level
-    * oracle gate) can never reroute a concurrent build (ADVICE r17).
+    * None = k-threshold auto). An explicit parameter, not process-wide
+    * state, so forcing a level for one build (v53's 3-level oracle gate)
+    * can never reroute a concurrent build (ADVICE r17).
     * Routing affects the PLAN only — every level assigns bit-identically
     * (NearestKitSpec parity pins; v53 hash-matches v52's oracle).
     */

@@ -272,35 +272,20 @@ object LevelPipeline {
     * in-frame, so the reference's own-row fallback is implicit). The
     * reference's LIMIT 7 is vacuous at hourly cadence (<=7 rows fit the
     * frame) and is adopted as the range-frame reading (SURVEY §2.4 A1).
-    */
-  /** @param naiveFrame use the literal centered RANGE frame instead of
-    *   the O(n) decimal prefix-difference form
-    *   ([[TimeSeriesOps.centeredMeanPrefix]]). The naive frame
-    *   re-accumulates O(frame) work per row
-    *   (`SlidingWindowFunctionFrame` cannot retract) — kept only so
-    *   LevelsBench can measure the difference; never use it on dense
-    *   series.
+    * The frame runs as the O(n) decimal prefix difference
+    * ([[TimeSeriesOps.centeredMeanPrefix]]), not the literal centered
+    * RANGE frame, which re-accumulates O(frame) work per row
+    * (`SlidingWindowFunctionFrame` cannot retract); the two forms are
+    * measured in bench/LEVELS_SPIKE_r14_mult20{,_naiveL4}.json.
     */
   def level4(
       level3: DataFrame,
-      radiusSeconds: Long = 3 * 3600 + 1,
-      naiveFrame: Boolean = false): DataFrame = {
-    val valid = level3.filter(col("flag") === 0)
-    val smoothed =
-      if (naiveFrame) {
-        val w = Window.partitionBy(col("site_no"))
-          .orderBy(col("time").cast("long"))
-          .rangeBetween(-radiusSeconds, radiusSeconds)
-        valid
-          .withColumn("soil_moist_filtered",
-            avg(col("soil_moist")).over(w))
-          .withColumn("depth_filtered",
-            avg(col("effective_depth")).over(w))
-      } else
-        TimeSeriesOps.centeredMeanPrefix(valid, Seq("site_no"), "time",
-          radiusSeconds, Map(
-            "soil_moist_filtered" -> "soil_moist",
-            "depth_filtered" -> "effective_depth"))
+      radiusSeconds: Long = 3 * 3600 + 1): DataFrame = {
+    val smoothed = TimeSeriesOps.centeredMeanPrefix(
+      level3.filter(col("flag") === 0), Seq("site_no"), "time",
+      radiusSeconds, Map(
+        "soil_moist_filtered" -> "soil_moist",
+        "depth_filtered" -> "effective_depth"))
     smoothed
       .select(col("site_no"), col("time"), col("soil_moist"),
         col("effective_depth"), col("rainfall"),
@@ -358,7 +343,6 @@ object LevelPipeline {
       silo: DataFrame,
       intensity: DataFrame,
       bucketedAsofSeconds: Option[Long] = None,
-      naiveLevel4Frame: Boolean = false,
       bucketedLevel1Seconds: Option[Long] = None,
       autoSkew: Boolean = false,
       autoSkewThreshold: Double = 0.5,
@@ -372,7 +356,7 @@ object LevelPipeline {
     val l2 = level2(l1, stations, silo, intensity,
       bucketedAsofSeconds = asofB)
     val l3 = level3(l2, stations)
-    level4(l3, naiveFrame = naiveLevel4Frame)
+    level4(l3)
   }
 
   /** One profiled chain run: the frame to act on, the skew plan it was
@@ -425,7 +409,6 @@ object LevelPipeline {
       silo: DataFrame,
       intensity: DataFrame,
       profilePath: String,
-      naiveLevel4Frame: Boolean = false,
       threshold: Double = 0.5,
       bucketSeconds: Long = 21600L,
       observeRefresh: Boolean = true,
@@ -468,7 +451,6 @@ object LevelPipeline {
       }
     val out = processLevels(chainRaw, stations, silo, intensity,
       bucketedAsofSeconds = plan.bucketedAsofSeconds,
-      naiveLevel4Frame = naiveLevel4Frame,
       bucketedLevel1Seconds = plan.bucketedLevel1Seconds)
     ProfiledLevels(out, plan, refresh)
   }

@@ -405,24 +405,21 @@ object SimilarityOps {
     * function tree (interpreted, boxed per element).
     */
   /** `treeLevels` forces the routing structure per CALL (1 = flat,
-    * 2/3 = tree); `None` falls back to the `graft.ann.treeLevels`
-    * sysprop as a process-wide default, then to the k-thresholds. The
-    * explicit parameter exists so a caller forcing a level (v53's
-    * 3-level oracle gate) never mutates global state a concurrent
-    * query could race on (ADVICE r17).
+    * 2/3 = tree); `None` routes by the k-thresholds. A per-call
+    * parameter, never process-wide state, so a caller forcing a level
+    * (v53's 3-level oracle gate) cannot reroute a concurrent query
+    * (ADVICE r17).
     */
   private def nearestExpr(
       vec: Column, centroids: Seq[(Int, Array[Double])],
       treeLevels: Option[Int] = None): Column = {
     val k = centroids.length
-    val forced = treeLevels.orElse(
-      sys.props.get("graft.ann.treeLevels").map(_.toInt))
-    forced match {
+    treeLevels match {
       case Some(1) => nearestExprFlat(vec, centroids)
       case Some(2) => nearestExprTree(vec, centroids)
       case Some(3) => nearestExprTree3(vec, centroids)
       case Some(other) => throw new IllegalArgumentException(
-        s"graft.ann.treeLevels must be 1, 2 or 3, got $other")
+        s"treeLevels must be 1, 2 or 3, got $other")
       case None =>
         if (k >= Tree3AssignThreshold) nearestExprTree3(vec, centroids)
         else if (k >= TreeAssignThreshold) nearestExprTree(vec, centroids)
@@ -451,8 +448,8 @@ object SimilarityOps {
     * and [[nearestExpr]] routes through the 3-level form — ⌈√g⌉
     * super-groups over the ⌈√k⌉ groups, O(k^(1/4)·d) at the top. Far
     * beyond sandbox scale by design (VERDICT r16 item 4: the structure
-    * should exist before the scale does); `-Dgraft.ann.treeLevels=3`
-    * forces it for specs and the ANN spike.
+    * should exist before the scale does); `treeLevels = Some(3)` forces
+    * it for specs and v53.
     */
   private[graft] val Tree3AssignThreshold = 100000
 

@@ -51,17 +51,9 @@ object SparkSpec {
   }
 
   // One session per JVM: sbt forks a single test JVM, so specs share it.
+  // Bench's and Verify's session shape, on two cores.
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Verify/Bench: the events test table stores TIMESTAMP(NANOS)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val s = GraftSession.harness(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
