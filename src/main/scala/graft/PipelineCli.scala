@@ -309,8 +309,8 @@ object PipelineCli {
       val l2 = LevelPipeline.level2(l1, stations, silo, intensity,
         emulateOldVersion = true)
       val l4 = LevelPipeline.level4(LevelPipeline.level3(l2, stations))
-      IncrementalRunner.upsertByDay(
-        l4.filter(col("time") > windowStart), c.output)
+      IncrementalRunner.upsertWindow(
+        l4.filter(col("time") > windowStart), c.output, windowStart)
     } else {
       IncrementalRunner.processLevelsIncremental(
         raw, stations, silo, intensity, c.output, now, days, c.padSeconds)

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.io.IOException
+
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -35,6 +37,14 @@ object DriverParquet {
 
   /** Overwrite `dir` with a single parquet file holding `rows` (each a
     * Seq aligned with `fields`). Snappy-compressed, like Spark's default.
+    *
+    * The rows go to a hidden sibling temp file first, which is renamed
+    * over `part-00000.parquet` only after a clean `close()`. A write
+    * that fails (a bad row, a full disk) deletes the temp file and
+    * leaves the old sidecar as it was, never a valid-but-truncated one.
+    * On a POSIX local filesystem the rename replaces the old file
+    * atomically; a store whose rename refuses an existing target gets a
+    * delete-then-rename.
     */
   def overwrite(
       spark: SparkSession,
@@ -44,33 +54,50 @@ object DriverParquet {
     val conf = spark.sessionState.newHadoopConf()
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
-    fs.delete(dirPath, true)
     fs.mkdirs(dirPath)
     val schema = MessageTypeParser.parseMessageType(
       fields.map {
         case Field(n, "int") => s"required int32 $n;"
         case Field(n, _) => s"required double $n;"
       }.mkString("message sidecar { ", " ", " }"))
-    val file = new Path(dirPath, "part-00000.parquet")
+    val file = new Path(dirPath, FileName)
+    val tmp = new Path(dirPath, s".$FileName.${java.util.UUID.randomUUID}.tmp")
     val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
+      .builder(HadoopOutputFile.fromPath(tmp, conf))
       .withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
-    try rows.foreach { r =>
-      require(r.length == fields.length,
-        s"DriverParquet row has ${r.length} values for ${fields.length} " +
-          s"fields (${fields.map(_.name).mkString(", ")})")
-      val g = new SimpleGroup(schema)
-      // via Number, not asInstanceOf[Int]: Scala widens Seq(int, int,
-      // double) literals to Seq[Double] at call sites, so an int-typed
-      // field may legitimately arrive as a boxed Double of exact value
-      fields.zip(r).foreach {
-        case (Field(n, "int"), v) => g.add(n, v.asInstanceOf[Number].intValue)
-        case (Field(n, _), v) => g.add(n, v.asInstanceOf[Number].doubleValue)
-      }
-      writer.write(g)
-    } finally writer.close()
+    try {
+      try rows.foreach { r =>
+        require(r.length == fields.length,
+          s"DriverParquet row has ${r.length} values for ${fields.length} " +
+            s"fields (${fields.map(_.name).mkString(", ")})")
+        val g = new SimpleGroup(schema)
+        // via Number, not asInstanceOf[Int]: Scala widens Seq(int, int,
+        // double) literals to Seq[Double] at call sites, so an int-typed
+        // field may legitimately arrive as a boxed Double of exact value
+        fields.zip(r).foreach {
+          case (Field(n, "int"), v) => g.add(n, v.asInstanceOf[Number].intValue)
+          case (Field(n, _), v) => g.add(n, v.asInstanceOf[Number].doubleValue)
+        }
+        writer.write(g)
+      } finally writer.close()
+    } catch {
+      case e: Throwable =>
+        fs.delete(tmp, false)
+        throw e
+    }
+    if (!fs.rename(tmp, file) &&
+        !(fs.delete(file, false) && fs.rename(tmp, file)))
+      throw new IOException(s"DriverParquet: cannot move $tmp over $file")
+    // a sidecar written by an older layout may hold other data files;
+    // only the new file (and its checksum) may stay
+    val keep = Set(FileName, s".$FileName.crc")
+    fs.listStatus(dirPath).map(_.getPath)
+      .filterNot(p => keep.contains(p.getName))
+      .foreach(fs.delete(_, true))
   }
+
+  private val FileName = "part-00000.parquet"
 }

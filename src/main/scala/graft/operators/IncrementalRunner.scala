@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental recompute-and-overwrite semantics (SURVEY.md §2.7, S6/S8/S9):
@@ -25,32 +25,17 @@ object IncrementalRunner {
     * (site_no, day) with dynamic overwrite — partitions NOT present in
     * `updated` survive (the set-based DROP SERIES + rewrite).
     *
-    * Rows are repartitioned on the partition columns first, so each
-    * (site, day) directory gets ONE file instead of one per shuffle
-    * partition — without it, a 31-day x 100-site recompute at 200
-    * shuffle partitions lays down ~600k near-empty files (the classic
-    * small-files failure). A single (site, day) is bounded by the hourly
-    * cadence, so the per-task write never skews large.
+    * Each (site, day) directory gets ONE file (see
+    * [[Layouts.writePartitioned]]) — without the clustering, a 31-day x
+    * 100-site recompute at 200 shuffle partitions lays down ~600k
+    * near-empty files (the classic small-files failure). A single
+    * (site, day) is bounded by the hourly cadence, so the per-task write
+    * never skews large.
     */
   def upsertByDay(updated: DataFrame, path: String, tsCol: String = "time"): Unit =
-    updated
-      .withColumn(DayCol, date_format(col(tsCol), "yyyy-MM-dd"))
-      .repartition(col("site_no"), col(DayCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      // Dynamic partition overwrite stages task output under
-      // .spark-staging-<jobId> and moves whole partition dirs at job
-      // commit; under committer algorithm v2 (direct task-commit
-      // renames) the staging interaction is strictly slower here —
-      // measured r22: s6 3.16 s (v1) vs 3.90 s (v2) warm — and v2's
-      // task-commit visibility is the documented correctness risk that
-      // pairs worst with overwrite semantics. Pin v1 for THIS write
-      // path; the option lands on the write job's own Hadoop conf
-      // (newHadoopConfWithOptions), so a session-level v2 default for
-      // plain appends/overwrites is untouched.
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "1")
-      .partitionBy("site_no", DayCol)
-      .parquet(path)
+    Layouts.writePartitioned(
+      updated.withColumn(DayCol, date_format(col(tsCol), "yyyy-MM-dd")),
+      path, Seq("site_no", DayCol), dynamic = true)
 
   /** Reads a day-partitioned level table back (partition-pruning friendly:
     * filters on site_no / day prune directories before any IO).
@@ -138,7 +123,8 @@ object IncrementalRunner {
     * window's first rows see their true predecessors — the reference
     * instead truncates at the window edge (SURVEY §2.7 risk 4); pass
     * padSeconds = 0 for bug-compatible truncation. Only rows INSIDE the
-    * window are written back.
+    * window are written back, through [[upsertWindow]], so the stored
+    * rows of the window's first day at or before its start survive.
     */
   def processLevelsIncremental(
       raw: DataFrame,
@@ -149,12 +135,15 @@ object IncrementalRunner {
       now: java.sql.Timestamp,
       backprocessDays: Int,
       padSeconds: Long = 6 * 3600): Unit =
-    processLevelsIncremental(raw, stations, silo, intensity,
-      new ParquetDaySink(outPath), now, backprocessDays, padSeconds)
+    upsertWindow(
+      levelsWindow(raw, stations, silo, intensity, now, backprocessDays,
+        padSeconds),
+      outPath, windowStartOf(now, backprocessDays))
 
   /** Sink-parameterized form: the recomputed window goes through the
     * pluggable write boundary (parquet, external DB, test collector —
-    * see [[Sink]]).
+    * see [[Sink]]). A partition-replace sink here has the boundary-day
+    * caveat [[upsertWindow]] repairs for the path form.
     */
   def processLevelsIncremental(
       raw: DataFrame,
@@ -164,13 +153,65 @@ object IncrementalRunner {
       sink: Sink,
       now: java.sql.Timestamp,
       backprocessDays: Int,
-      padSeconds: Long): Unit = {
-    val windowStart = lit(now) - expr(s"INTERVAL $backprocessDays DAYS")
+      padSeconds: Long): Unit =
+    sink.upsert(levelsWindow(raw, stations, silo, intensity, now,
+      backprocessDays, padSeconds))
+
+  private def windowStartOf(now: java.sql.Timestamp, backprocessDays: Int): Column =
+    lit(now) - expr(s"INTERVAL $backprocessDays DAYS")
+
+  /** level4 over the padded window, cut back to `(windowStart, now]`. */
+  private def levelsWindow(
+      raw: DataFrame,
+      stations: DataFrame,
+      silo: DataFrame,
+      intensity: DataFrame,
+      now: java.sql.Timestamp,
+      backprocessDays: Int,
+      padSeconds: Long): DataFrame = {
+    val windowStart = windowStartOf(now, backprocessDays)
     val padded = raw.filter(
       col("time") > windowStart - expr(s"INTERVAL $padSeconds SECOND") &&
         col("time") <= lit(now))
-    val level4 = LevelPipeline.processLevels(padded, stations, silo, intensity)
-    sink.upsert(level4.filter(col("time") > windowStart))
+    LevelPipeline.processLevels(padded, stations, silo, intensity)
+      .filter(col("time") > windowStart)
+  }
+
+  /** [[upsertByDay]] of a recomputed window `(windowStart, now]` that
+    * keeps what lies before the window. A `windowStart` that is not
+    * midnight cuts its day in two, and a plain partition replace would
+    * rewrite that (site, day) with only its in-window rows, deleting
+    * the day's earlier ones (the reference point-overwrites and never
+    * does). So the stored rows of that day at or before `windowStart` are
+    * unioned back, for the sites whose boundary partition the window
+    * rewrites; every other partition is left to the dynamic overwrite.
+    *
+    * Scale shape: the window is checkpointed once (it is read by the
+    * site set and the write); the stored rows come from ONE day's
+    * partitions (the day literal prunes directories before any IO) and
+    * are checkpointed because the write overwrites the path they are
+    * read from. A fresh store skips both: a backfill is a plain write.
+    */
+  def upsertWindow(
+      window: DataFrame,
+      path: String,
+      windowStart: Column,
+      tsCol: String = "time"): Unit = {
+    val spark = window.sparkSession
+    if (!storeExists(spark, path)) upsertByDay(window, path, tsCol)
+    else {
+      val firstDay = date_format(windowStart, "yyyy-MM-dd")
+      val u = window.localCheckpoint(true)
+      val sites = u
+        .filter(date_format(col(tsCol), "yyyy-MM-dd") === firstDay)
+        .select(col("site_no")).distinct()
+      val kept = spark.read.parquet(path)
+        .filter(col(DayCol) === firstDay && col(tsCol) <= windowStart)
+        .drop(DayCol)
+        .join(broadcast(sites), Seq("site_no"), "left_semi")
+        .localCheckpoint(true)
+      upsertByDay(u.unionByName(kept), path, tsCol)
+    }
   }
 
   /** Snapshot diff — which keys were added, removed, or changed between

@@ -404,13 +404,8 @@ object IvfIndex {
     // kCells (vs scan-tasks x kCells); locally it also un-serializes the
     // write — a single-file embeddings scan otherwise writes every cell
     // directory sequentially from one task (measured r22: v52's vectors
-    // write 0.87 s serial). The partition count is pinned to the default
-    // parallelism because an un-numbered repartition lets AQE coalesce
-    // the tiny local shuffle back to ONE task, re-serializing the write;
-    // the file count is unaffected either way (a cell hashes to exactly
-    // one reducer, so the layout is one file per cell at any count).
-    rows.repartition(spark.sparkContext.defaultParallelism, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
+    // write 0.87 s serial).
+    Layouts.writePartitioned(rows, s"$path/vectors", Seq("cell"))
     // a rebuild is a new incarnation: stale replay markers must not mask
     // the new stream's batch ids (ADVICE r9)
     val fs = fsFor(spark, path)
@@ -630,6 +625,9 @@ object IvfIndex {
       if (!meta.sq8) withPq
       else withPq.withColumn("sq8", SimilarityOps.sq8EncodeCol(col(vecCol),
         cachedSq8Codebook(spark, path, stamp)))
+    // the one partitioned write outside Layouts.writePartitioned: an
+    // append adds files (one per task per touched cell, no shuffle) and
+    // [[compact]] folds them back to one file per cell
     rows.write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
   }
 
@@ -738,15 +736,8 @@ object IvfIndex {
                 "IvfIndex.write or drop the index directory instead")
         }
         if (alive.nonEmpty)
-          survivors
-            .repartition(col("cell"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            // v1 for dynamic-overwrite staging — same reasoning and
-            // measurement as IncrementalRunner.upsertByDay (r22)
-            .option("mapreduce.fileoutputcommitter.algorithm.version", "1")
-            .partitionBy("cell")
-            .parquet(src)
+          Layouts.writePartitioned(survivors, src, Seq("cell"),
+            dynamic = true)
         val fs = fsFor(spark, src)
         affected.filterNot(alive).foreach { cell =>
           fs.delete(hadoopPath(s"$src/cell=$cell"), true)
@@ -776,7 +767,7 @@ object IvfIndex {
     * — the small-file repair for an index that has absorbed many
     * [[append]] batches (each append adds >= 1 file per touched cell;
     * thousands of appends make the probe-side scan open thousands of
-    * tiny files). repartition BY the cell column moves every cell's rows
+    * tiny files). [[Layouts.writePartitioned]] moves every cell's rows
     * into a single task before partitionBy splits directories, so each
     * cell directory lands exactly one file.
     *
@@ -797,9 +788,7 @@ object IvfIndex {
     val tmp = s"$path/vectors_compacting"
     val old = s"$path/vectors_old"
     recoverSwap(spark, src, tmp, old)
-    spark.read.parquet(src)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    Layouts.writePartitioned(spark.read.parquet(src), tmp, Seq("cell"))
     val fs = fsFor(spark, path)
     def must(ok: Boolean, step: String): Unit =
       if (!ok) throw new IllegalStateException(

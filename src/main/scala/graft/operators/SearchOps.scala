@@ -115,8 +115,8 @@ object SearchOps {
     * reads only its terms' bucket partitions; per-term df is re-derived
     * from the pruned read (exact — every posting of a term lives in that
     * term's bucket), so no df artifact can go stale. One corpus shuffle
-    * to build (groupBy (term, doc)); the repartition on bkt makes each
-    * partition directory a few large files instead of one per task.
+    * to build (groupBy (term, doc)); the write clusters on bkt, so each
+    * partition directory is one file instead of one per task.
     */
   def bm25IndexWrite(
       docs: DataFrame,
@@ -136,16 +136,14 @@ object SearchOps {
       .agg(count(lit(1)).as("n"), sum(col("__dl")).as("sum_dl"),
         lit(numBuckets).as("num_buckets"), lit(idCol).as("id_col"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    stats
+    val postings = stats
       .select(col(idCol), col("__dl").as("dl"),
         explode(col("__toks")).as("term"))
       .groupBy(col("term"), col(idCol), col("dl"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("bkt",
         pmod(xxhash64(col("term")), lit(numBuckets.toLong)).cast("int"))
-      .repartition(col("bkt"))
-      .write.mode("overwrite").partitionBy("bkt")
-      .parquet(s"$path/postings")
+    Layouts.writePartitioned(postings, s"$path/postings", Seq("bkt"))
   }
 
   /** Serve a BM25 query from a persisted postings index. The scan carries

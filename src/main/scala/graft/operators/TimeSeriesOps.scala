@@ -367,12 +367,10 @@ object TimeSeriesOps {
       lines: DataFrame,
       keys: Seq[String],
       path: String): Unit =
-    lines
-      .repartition(keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col) ++
+    Layouts.writePartitioned(lines, path, keys, format = "text",
+      prepare = _.sortWithinPartitions(keys.map(col) ++
         Seq(col("at_time").asc_nulls_first, col("pos")): _*)
-      .select(keys.map(col) :+ col("line").as("value"): _*)
-      .write.mode("overwrite").partitionBy(keys: _*).text(path)
+        .select(keys.map(col) :+ col("line").as("value"): _*))
 
   /** Centered moving aggregate over a +/- time radius (the level4 filter).
     *

@@ -1,6 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.operators.IncrementalRunner
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class IncrementalRunnerSpec extends SparkSpec {
@@ -153,12 +160,13 @@ class IncrementalRunnerSpec extends SparkSpec {
     assert(out === Set(T("2024-01-10 00:00:01"), T("2024-01-15 00:00:00")))
   }
 
-  test("processLevelsIncremental writes only the window, pads history") {
-    val path = tmpDir()
-    // hourly raw over 2 days for one site, all fields constant-ish
-    val raw = (0 until 48).map { h =>
-      (1, T(f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00"),
-        100L, 12.0, 1000.0, 1005.0, 20.0, 50.0, 0.0,
+  /** Level-pipeline inputs for one site: hourly raw and intensity from
+    * 2024-01-01 00:00 for `hours` hours, all fields constant-ish.
+    */
+  private def levelInputs(hours: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    def hour(h: Int) = T(f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00")
+    val raw = (0 until hours).map { h =>
+      (1, hour(h), 100L, 12.0, 1000.0, 1005.0, 20.0, 50.0, 0.0,
         20.0, 30.0, 21.0, 31.0, 0.1, 0.2, 0.3, 0)
     }.toDF("site_no", "time", "count", "battery", "pressure1", "pressure2",
       "external_temperature", "external_humidity", "rain",
@@ -168,9 +176,14 @@ class IncrementalRunnerSpec extends SparkSpec {
       1, 0.01, 1000.0, 100.0, 1.0, 1.0, 100.0, 1.0, 0.05, 0.05)).toDF()
     val silo = Seq((1, T("2024-01-01 08:00:00"), 10.0, 60.0))
       .toDF("site_no", "time", "average_temperature", "average_humidity")
-    val intensity = (0 until 48).map(h =>
-      (1, T(f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00"), 130.0))
+    val intensity = (0 until hours).map(h => (1, hour(h), 130.0))
       .toDF("site_no", "time", "intensity")
+    (raw, stations, silo, intensity)
+  }
+
+  test("processLevelsIncremental writes only the window, pads history") {
+    val path = tmpDir()
+    val (raw, stations, silo, intensity) = levelInputs(48)
 
     IncrementalRunner.processLevelsIncremental(
       raw, stations, silo, intensity, path,
@@ -186,6 +199,87 @@ class IncrementalRunnerSpec extends SparkSpec {
       raw, stations, silo, intensity, path,
       now = T("2024-01-03 00:00:00"), backprocessDays = 1)
     assert(IncrementalRunner.readLevel(spark, path).count() === n)
+  }
+
+  test("processLevelsIncremental with a mid-day now keeps the rows " +
+    "before each window start") {
+    val path = tmpDir()
+    val (raw, stations, silo, intensity) = levelInputs(96)
+    def storedUpTo(ts: java.sql.Timestamp): Seq[String] =
+      IncrementalRunner.readLevel(spark, path)
+        .filter(col("time") <= ts).collect().map(_.toString).sorted.toSeq
+
+    // window (01-01 14:00, 01-03 14:00], then (01-03 02:00, 01-04 02:00]:
+    // the second window starts mid-day on a day the first one wrote
+    IncrementalRunner.processLevelsIncremental(
+      raw, stations, silo, intensity, path,
+      now = T("2024-01-03 14:00:00"), backprocessDays = 2)
+    val secondStart = T("2024-01-03 02:00:00")
+    val before = storedUpTo(secondStart)
+    assert(before.exists(_.contains("2024-01-03 01:00:00")),
+      "fixture: the boundary day holds rows before the second window")
+    IncrementalRunner.processLevelsIncremental(
+      raw, stations, silo, intensity, path,
+      now = T("2024-01-04 02:00:00"), backprocessDays = 1)
+    assert(storedUpTo(secondStart) === before)
+    assert(IncrementalRunner.readLevel(spark, path)
+      .filter(col("time") > T("2024-01-03 14:00:00")).count() > 0)
+  }
+
+  test("upsertWindow unions back boundary rows only where the window " +
+    "rewrites the boundary partition") {
+    val path = tmpDir()
+    IncrementalRunner.upsertByDay(Seq(
+      (1, T("2024-01-02 06:00:00"), 1.0),
+      (1, T("2024-01-02 18:00:00"), 2.0),
+      (2, T("2024-01-02 06:00:00"), 3.0),
+      (2, T("2024-01-02 18:00:00"), 4.0)).toDF("site_no", "time", "v"), path)
+    // a recompute of (01-02 12:00, ...] that only covers site 1
+    IncrementalRunner.upsertWindow(
+      Seq((1, T("2024-01-02 20:00:00"), 5.0)).toDF("site_no", "time", "v"),
+      path, lit(T("2024-01-02 12:00:00")))
+    val out = IncrementalRunner.readLevel(spark, path)
+      .select("site_no", "time", "v").as[(Int, java.sql.Timestamp, Double)]
+      .collect().toSet
+    assert(out === Set(
+      (1, T("2024-01-02 06:00:00"), 1.0),   // before the window: kept
+      (1, T("2024-01-02 20:00:00"), 5.0),   // the recomputed window
+      (2, T("2024-01-02 06:00:00"), 3.0),   // site 2 not rewritten
+      (2, T("2024-01-02 18:00:00"), 4.0)))
+  }
+
+  test("upsertByDay writes one file per (site, day) from a write stage " +
+    "with more than one task") {
+    val path = tmpDir()
+    val df = (for (site <- 1 to 3; day <- 1 to 4; hour <- Seq(3, 15))
+      yield (site, T(f"2024-01-0$day%d $hour%02d:00:00"), site * 10.0 + day))
+      .toDF("site_no", "time", "v").repartition(4)
+    val sc = spark.sparkContext
+    // tasks of each job's final stage; the write job runs last
+    val finalStageTasks =
+      new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        finalStageTasks.add(js.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      IncrementalRunner.upsertByDay(df, path)
+      ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val writeTasks = finalStageTasks.asScala.toSeq.last.intValue
+    assert(sc.defaultParallelism >= 2)
+    assert(writeTasks === sc.defaultParallelism)
+
+    val walk = Files.walk(Paths.get(path))
+    val files =
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList
+      finally walk.close()
+    val perDir = files.groupBy(_.getParent).values.map(_.size)
+    assert(perDir.size === 12)
+    assert(perDir.forall(_ == 1), s"files per (site, day): $perDir")
   }
 
   test("diffSnapshots: added/removed/changed with column attribution, " +

@@ -14,14 +14,7 @@ class SessionLintSpec extends AnyFunSuite {
 
   test("SparkSession.builder appears in src/main/scala only in " +
     "GraftSession.scala") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root),
-      s"run from the repo root: ${root.toAbsolutePath} is not a directory")
-    val walk = Files.walk(root)
-    val sources: Seq[Path] =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala")).toList
-      finally walk.close()
+    val sources = SessionLintSpec.mainSources()
     assert(sources.exists(_.getFileName.toString == "GraftSession.scala"))
     val offenders = for {
       p <- sources if p.getFileName.toString != "GraftSession.scala"
@@ -31,5 +24,18 @@ class SessionLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "build sessions with GraftSession.product/harness, not " +
         s"SparkSession.builder: ${offenders.mkString(", ")}")
+  }
+}
+
+object SessionLintSpec {
+  /** Every `.scala` file under src/main/scala (run from the repo root). */
+  def mainSources(): Seq[Path] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root),
+      s"run from the repo root: ${root.toAbsolutePath} is not a directory")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toList
+    finally walk.close()
   }
 }
